@@ -3839,10 +3839,14 @@ def _burstiness_profile(spark, sf):
 # (the knn_graph/LSH plane-policy derivation and the winnow_pairs
 # fractional df cap touch the similarity/winnow closures) head the
 # window; opportunistic refreshes fill the remaining slots.
+# llmmap_compare_sources (evidence from r7) took the last opportunistic
+# slot, interarrival_profile's, when cosine_compare's persisted
+# normalization became tracked for release_all.
 _CHECK_WINDOW = [
     "embedding_contamination_windowed",
     "audit_verdict_sources",
     "dli_compare_sources",
+    "llmmap_compare_sources",
     "ann_ivf_sq8",
     "ann_ivf_topk",
     "ann_lsh_multiprobe",
@@ -3889,7 +3893,6 @@ _CHECK_WINDOW = [
     "detect_documents",
     "doc_fingerprints",
     "events_rollup_cascade",
-    "interarrival_profile",
 ]
 
 

@@ -10,6 +10,14 @@ ProbeSource (probing.py); tests and offline runs inject responses.
 Every return value is a DataFrame (or a small dict of DataFrames for
 audit) — nothing is collected except by the caller/report renderer, so the
 same engine runs a 20-probe audit or a corpus-scale detect unchanged.
+
+audit() materializes its result relations once per call: the responses
+(narrowed to one partition after the probe stage), the fingerprints, the
+comparison rows and the per-probe details are persisted, tracked and
+filled before it returns, and the verdict, consistency and style
+distribution are derived from those caches. The report's actions then
+only scan cached blocks. The caller frees them with
+``persistence.release_all()`` once the result has been rendered.
 """
 
 from __future__ import annotations
@@ -27,6 +35,7 @@ from model_audit_spark.operators.audit import (
 )
 from model_audit_spark.operators.detect import detect as detect_op
 from model_audit_spark.operators.detect import style_scores
+from model_audit_spark.persistence import fill_caches_concurrently, track
 from model_audit_spark.registry import get_fingerprinter
 from model_audit_spark.sources.cache import FingerprintCache
 
@@ -90,20 +99,31 @@ class AuditEngine:
         if not model or not model.strip():
             raise ValueError("model name must be non-empty")
         responses = self._responses([model])
-        combined = responses.orderBy("probe_seq").agg(
-            F.concat_ws("\n", F.collect_list("response")).alias("text")
-        ).withColumn("text_id", F.lit(0))
-        if combined.filter(F.length("text") > 0).isEmpty():
-            return self.spark.createDataFrame(
-                [(model, False, "no responses")],
-                "model STRING, verified BOOLEAN, reason STRING",
-            )
-        # 12 score rows — driver-side argmax/claimed logic like the
-        # reference (engine.py:128-163); the heavy lifting (scoring the
-        # combined text) already ran distributed.
-        scored = style_scores(
-            combined, self.spark, "text", "text_id"
-        ).orderBy("family_rank").collect()
+        # One partition after the probe stage: the sort feeding
+        # collect_list and the global aggregate need no exchange. The
+        # combined text is computed once: first() fills the cache that
+        # the scoring then reads.
+        combined = (
+            responses.repartition(1)
+            .orderBy("probe_seq")
+            .agg(F.concat_ws("\n", F.collect_list("response")).alias("text"))
+            .withColumn("text_id", F.lit(0))
+            .persist()
+        )
+        try:
+            if not combined.first().text:
+                return self.spark.createDataFrame(
+                    [(model, False, "no responses")],
+                    "model STRING, verified BOOLEAN, reason STRING",
+                )
+            # 12 score rows — driver-side argmax/claimed logic like the
+            # reference (engine.py:128-163); the heavy lifting (scoring
+            # the combined text) runs distributed.
+            scored = style_scores(
+                combined, self.spark, "text", "text_id"
+            ).orderBy("family_rank").collect()
+        finally:
+            combined.unpersist()
         best = max(scored, key=lambda r: (r.score, -r.family_rank))
         model_lower = model.lower()
         claimed = next(
@@ -155,19 +175,33 @@ class AuditEngine:
         student: str,
         responses: DataFrame | None = None,
     ) -> AuditResultData:
-        """engine.py:175-337 — llmmap + dli + per-probe style + vote."""
-        resp = responses if responses is not None else self._responses(
-            [teacher, student]
+        """engine.py:175-337 — llmmap + dli + per-probe style + vote.
+
+        An injected `responses` relation is narrowed to the two audited
+        models, like the probe path and compare(): other models in the
+        table neither vote in the verdict nor appear in the report."""
+        pair = [teacher, student]
+        resp = (
+            self._responses(pair)
+            if responses is None
+            else responses.filter(F.col("model_id").isin(pair))
         )
         # Common-subexpression reuse: both methods + the style loop read
-        # the SAME responses; persist once (engine.py:231-245).
-        resp = resp.persist()
+        # the SAME responses; persist once (engine.py:231-245). They are
+        # bounded by probes × 2 models, so they live on one partition,
+        # which satisfies every aggregate, window, sort and join below
+        # without an exchange. repartition(1), never coalesce(1): a
+        # coalesce would fuse into HTTPProbeSource's plan and serialize
+        # its `concurrency` partitions of live API calls into one task.
+        resp = track(resp.repartition(1).persist())
         skipped: list[str] = []
 
         llmmap = get_fingerprinter("llmmap")
-        fp = llmmap.fingerprint(resp)
+        fp = track(llmmap.fingerprint(resp).persist())
         comps = llmmap.compare(fp)
 
+        # isEmpty also fills the responses cache, before the concurrent
+        # fills below all read it
         if resp.filter(F.length(F.coalesce("response", F.lit(""))) > 0).isEmpty():
             skipped.append("dli")
         else:
@@ -181,8 +215,23 @@ class AuditEngine:
                     "similarity", "is_derived", "threshold", "confidence",
                 )
             )
-
-        details = probe_style_consistency(resp, self.spark, teacher, student)
+        # The union (two legs) and the details' full outer join lose the
+        # single-partition property; both read only the cached responses,
+        # so coalescing their output back to one partition fuses no probe
+        # work, and the relations derived from them need no exchange.
+        comps = track(comps.coalesce(1).persist())
+        details = track(
+            probe_style_consistency(resp, self.spark, teacher, student)
+            .coalesce(1)
+            .persist()
+        )
+        fill_caches_concurrently(
+            [fp, comps, details],
+            labels=[
+                "audit: fingerprints", "audit: comparisons",
+                "audit: probe details",
+            ],
+        )
         return AuditResultData(
             model_a=teacher,
             model_b=student,

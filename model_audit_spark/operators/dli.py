@@ -229,12 +229,13 @@ def behavior_compare(
     re-runs the corpus scan per reference (2-4 extra scans at 100 TB).
     The two relations are independent corpus passes, so their cache
     fills run CONCURRENTLY (r13, guide §2.6) instead of leg-after-leg
-    inside the final action's stage waves."""
-    from model_audit_spark.persistence import fill_caches_concurrently
+    inside the final action's stage waves. Both are tracked, so
+    persistence.release_all frees them."""
+    from model_audit_spark.persistence import fill_caches_concurrently, track
 
-    dist = bigram_distribution(df, group_col, text_col).persist()
+    dist = track(bigram_distribution(df, group_col, text_col).persist())
     js = js_divergence_pairs(dist, group_col)
-    feats = behavior_features(df, group_col, text_col).persist()
+    feats = track(behavior_features(df, group_col, text_col).persist())
     fill_caches_concurrently(
         [dist, feats],
         labels=["behavior_compare: bigrams", "behavior_compare: features"],

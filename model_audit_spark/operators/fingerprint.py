@@ -78,8 +78,11 @@ def cosine_compare(
     The fingerprint relation (one row per model) is persisted: it is
     referenced from both sides of the pair join, and without the persist
     each side re-runs the corpus-wide feature aggregation beneath it.
+    It is tracked, so persistence.release_all frees it.
     """
-    norm = with_normalized_dims(fp).persist()
+    from model_audit_spark.persistence import track
+
+    norm = track(with_normalized_dims(fp).persist())
     a = norm.select(
         F.col(group_col).alias("model_a"),
         *[F.col(f"n_{d}").alias(f"a_{d}") for d in FINGERPRINT_DIMS],

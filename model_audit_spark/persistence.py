@@ -132,6 +132,9 @@ def fill_caches_concurrently(
     lazy_checkpoint_scope), and any relation they ALL scan should be
     filled BEFORE this call — concurrent legs racing a cold shared
     cache each recompute it into the same blocks (correct, wasted CPU).
+    Workers must not enter lazy_checkpoint_scope: the scope's lock
+    belongs to the thread that holds it, so a caller inside a scope
+    waiting on a worker that tries to enter one deadlocks the session.
     Job descriptions are thread-local, so each leg labels its own jobs
     in the UI. Exceptions propagate (first failure wins)."""
     from concurrent.futures import ThreadPoolExecutor

@@ -610,3 +610,106 @@ def test_http_probe_source_end_to_end_over_real_wire(spark):
     assert len(srv.requests) == 40
     models_seen = {r["json"]["model"] for r in srv.requests}
     assert models_seen == {"model-a", "model-b"}
+
+
+# ------------------------------------------------- audit result lifecycle
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_audit_report_verify_release_leaves_no_cache(spark, responses):
+    """A request (audit + report + verify) persists its result relations,
+    those of cosine_compare and behavior_compare included, and
+    release_all() frees every one of them, request after request."""
+    from model_audit_spark import persistence
+
+    persistence.release_all()
+    start = _persistent_rdd_ids(spark)
+    eng = AuditEngine(spark, StaticResponseSource(responses))
+    for _ in range(2):
+        result = eng.audit("teacher-gpt-4", "student-model")
+        generate_report(result)
+        eng.verify("student-model").collect()
+        assert len(_persistent_rdd_ids(spark) - start) >= 4
+        persistence.release_all()
+        assert _persistent_rdd_ids(spark) - start == set()
+        assert persistence.tracked_count() == 0
+
+
+def test_audit_injected_responses_narrow_to_the_pair(spark, responses):
+    """A responses table holding a third model gives the same verdict as
+    the two-model table: only the audited pair votes."""
+    from model_audit_spark import persistence
+
+    third = spark.createDataFrame(
+        [
+            (
+                "other-model", seq, f"p{seq}", "qa",
+                "I'm sorry, but I can't help with that request.",
+            )
+            for seq in range(1, 5)
+        ],
+        responses.schema,
+    )
+    eng = AuditEngine(spark)
+    pair = ("teacher-gpt-4", "student-model")
+    try:
+        two = eng.audit(*pair, responses=responses)
+        three = eng.audit(*pair, responses=responses.unionByName(third))
+        assert three.verdict.first() == two.verdict.first()
+        comps = three.comparisons.collect()
+        assert sorted(r.method for r in comps) == ["dli", "llmmap"]
+        assert {(r.model_a, r.model_b) for r in comps} == {
+            ("student-model", "teacher-gpt-4")
+        }
+        assert "other-model" not in generate_report(three)
+    finally:
+        persistence.release_all()
+
+
+def test_audit_over_http_keeps_probe_concurrency(spark, tmp_path):
+    """audit() narrows the responses to one partition AFTER the probe
+    stage: the live calls still run on `concurrency` partitions, and each
+    (model, probe) is called exactly once per audit."""
+    import os
+
+    from model_audit_spark import persistence
+    from model_audit_spark.catalogs import probes_df
+    from model_audit_spark.probing import OpenAIWireTransport
+
+    log_dir = str(tmp_path)
+
+    def fake_post(url, json=None, headers=None, timeout=None):
+        from pyspark import TaskContext
+
+        class Resp:
+            def raise_for_status(self):
+                pass
+
+            def json(self):
+                return {"choices": [{"message": {"content": "Certainly! "
+                        "Here's a breakdown. Let me know if that helps."}}]}
+
+        pid = TaskContext.get().partitionId()
+        with open(os.path.join(log_dir, f"partition-{pid}"), "a") as f:
+            f.write(json["model"] + "\n")
+        return Resp()
+
+    src = HTTPProbeSource(
+        transport=OpenAIWireTransport(
+            api_base="https://example.test", post=fake_post
+        ),
+        concurrency=4,
+    )
+    try:
+        result = AuditEngine(spark, src).audit("model-a", "model-b")
+        assert result.verdict.first().total_votes == 2
+    finally:
+        persistence.release_all()
+    calls = {
+        p.name: p.read_text().split() for p in tmp_path.iterdir()
+    }
+    assert sorted(calls) == [f"partition-{i}" for i in range(4)]
+    assert sum(len(v) for v in calls.values()) == 2 * probes_df(spark).count()

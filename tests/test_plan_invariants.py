@@ -604,3 +604,55 @@ def test_no_pushed_filter_rebuilds_heavy_arrays(spark):
         assert not bad, (q, bad[0][:160])
         persistence.release_all()
         spark.catalog.clearCache()
+
+
+def executed_operators(df) -> list[str]:
+    """One line per operator the last action on `df` ran: the AQE final
+    plan, query stages included, but not the build plan of a cached
+    relation (an earlier job filled it; explain strings print it below
+    InMemoryRelation all the same)."""
+    out: list[str] = []
+
+    def walk(node) -> None:
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+            return
+        out.append(node.simpleString(25))
+        if kind.endswith("QueryStageExec"):
+            walk(node.plan())
+        elif kind != "InMemoryTableScanExec":
+            kids = node.children()
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_audit_results_scan_caches_without_shuffle(spark):
+    """engine.audit fills each result relation once, on one partition:
+    the report's relations then scan cached blocks, with no parquet
+    re-read and no shuffle of any kind."""
+    from model_audit_spark import persistence
+    from model_audit_spark.engine import AuditEngine
+
+    resp = entrymod._responses_fixture(spark, SF)
+    try:
+        result = AuditEngine(spark).audit("src0", "src1", responses=resp)
+        for name in (
+            "verdict", "comparisons", "probe_details", "consistency",
+            "style_distribution", "fingerprints",
+        ):
+            df = getattr(result, name)
+            df.collect()
+            ops = executed_operators(df)
+            assert any(o.startswith("InMemoryTableScan") for o in ops), (
+                name, ops,
+            )
+            assert not any("FileScan" in o for o in ops), (name, ops)
+            assert not any(o.startswith("Exchange") for o in ops), (
+                name, ops,
+            )
+    finally:
+        persistence.release_all()
